@@ -94,14 +94,15 @@ def fanout(df: DataFrame) -> DataFrame:
 
 
 def _parse_bytes(v: str) -> int:
-    """Spark size-string -> bytes ('8m', '128MB', '134217728b', plain int)."""
+    """Spark size-string -> bytes ('8m', '1.5g', '128MB', '134217728b',
+    plain int); the number parses as a float so fractional sizes count."""
     s = str(v).strip().lower()
     mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
     if len(s) > 1 and s[-1] == "b" and s[-2] in mult:
         s = s[:-1]
     if s and s[-1] in mult:
-        return int(s[:-1]) * mult[s[-1]]
-    return int(s.rstrip("b") or 0)
+        return int(float(s[:-1]) * mult[s[-1]])
+    return int(float(s.rstrip("b") or 0))
 
 
 def _listing_bytes(files: list[str]) -> int:

@@ -154,46 +154,55 @@ def o_davg(expr: str, nd: int = 4) -> str:
 
 
 def item_sets(df: DataFrame, group_col: str, item_col: str) -> DataFrame:
-    """``(g, items)`` — the sorted distinct item set per group, one shuffle.
+    """``(g, items)`` — the sorted distinct item set per group.
 
-    ``collect_set`` dedups ``(group, item)`` map-side inside the partial
-    aggregate, so this replaces the ``SELECT DISTINCT`` + exchange that
-    the within-group self-join form paid BEFORE its join (r13 optimization
-    pass: the distinct + self-join pair generator planned 3-4 exchanges
-    and re-ran the distinct subtree once per consumer branch; this form is
-    one exchange keyed on the group).  Items sort ascending so downstream
-    pair explosion yields ``pa < pb`` without a filter.
+    The raw ``(group, item)`` rows are hash-repartitioned on the group key
+    straight off the scan, so the ``collect_set`` aggregate runs in one
+    step on the already-keyed side of that exchange: the scan stage is a
+    bare hash write (a single-row-group scan is one task, and a partial
+    ``collect_set`` there serialized the whole corpus through it), and the
+    dedup runs in parallel after the shuffle.  The exchange carries no
+    count, so AQE coalesces it like the aggregate's own.  Items sort
+    ascending so :func:`grouped_pairs` yields ``pa < pb`` without a
+    filter; null items are dropped by ``collect_set``.
     """
-    return df.groupBy(F.col(group_col).alias("g")).agg(
-        F.sort_array(F.collect_set(F.col(item_col))).alias("items")
+    return (
+        df.repartition(group_col)
+        .groupBy(F.col(group_col).alias("g"))
+        .agg(F.sort_array(F.collect_set(F.col(item_col))).alias("items"))
     )
-
-
-# flatten/transform pair expansion over a sorted array: element i (0-based)
-# pairs with every later element — slice() is 1-based, so the tail after i
-# starts at position i+2 (slice clamps past the end).  k items -> k(k-1)/2
-# pairs, all with pa < pb because `items` is sorted.
-_PAIR_EXPLODE_EXPR = (
-    "flatten(transform(items, (x, i) -> "
-    "transform(slice(items, i + 2, size(items)), y -> struct(x AS pa, y AS pb))))"
-)
 
 
 def grouped_pairs(df: DataFrame, group_col: str, item_col: str) -> DataFrame:
     """Distinct unordered item pairs per group: ``(pa, pb)`` rows, pa < pb,
     one row per (group, pair) occurrence.
 
-    Map-side array expansion over :func:`item_sets` — semantically the
-    within-group self-join ``a.g = b.g AND a.item < b.item`` over distinct
-    (group, item) rows, minus the join and its exchanges.  Pair fan-out is
-    bounded by group size (k items -> k(k-1)/2), exactly like the join
-    form, so the 100 TB argument is unchanged: cost scales with rows x
-    group-size, never corpus².
+    Semantically the within-group self-join ``a.g = b.g AND a.item <
+    b.item`` over distinct non-null (group, item) rows, minus the join and
+    its exchanges.  Two codegen'd generators over :func:`item_sets` emit
+    the pairs: ``posexplode`` yields each item ``pa`` with its 0-based
+    position ``i``, and ``explode(slice(items, i + 2, size(items)))``
+    yields every later item (``slice`` is 1-based and clamps past the
+    end).  Pair fan-out is bounded by group size (k items -> k(k-1)/2), so
+    cost scales with rows x group size, never corpus².
     """
     return (
         item_sets(df, group_col, item_col)
-        .select(F.explode(F.expr(_PAIR_EXPLODE_EXPR)).alias("pr"))
-        .select("pr.pa", "pr.pb")
+        .select(F.posexplode("items").alias("i", "pa"), "items")
+        .select("pa", F.explode(F.expr("slice(items, i + 2, size(items))")).alias("pb"))
+    )
+
+
+def both_directions(pairs: DataFrame) -> DataFrame:
+    """``(src, dst)`` — each ``(pa, pb)`` row in both orientations, the
+    symmetric edge list of an undirected pair set.  One ``inline``
+    generator over a single read of ``pairs``: a ``UNION ALL`` of the two
+    projections evaluates the ``pairs`` subtree once per branch.  (``stack``
+    would do the same but types every output column nullable, which adds
+    ``isnotnull`` filters to the joins above and changes their plans.)"""
+    return pairs.selectExpr(
+        "inline(array(named_struct('src', pa, 'dst', pb),"
+        " named_struct('src', pb, 'dst', pa)))"
     )
 
 

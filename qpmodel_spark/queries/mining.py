@@ -68,13 +68,11 @@ def op_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any realistic pair frequency, so the double math is bit-identical
     across engines.  See module doc for the scale argument.
     """
-    # r13 optimization: one collect_set-per-order aggregate replaces the
-    # DISTINCT subtree the old plan re-ran once per consumer (item counts,
-    # order count, both self-join sides — 4 exchanges of the same data);
-    # pair generation is the map-side array explosion of grouped_pairs
-    # (bounded by order size) instead of the within-order self-join.  All
-    # three consumers hang off the identical groupBy(o) exchange, which
-    # Spark reuses at runtime.
+    # One sorted item set per order (item_sets: hash exchange on the order
+    # key straight off the scan, then collect_set) feeds all three
+    # consumers: the order count, the item counts and grouped_pairs'
+    # generator pair explosion (bounded by order size, no self-join).
+    # They hang off the identical exchange, which Spark reuses at runtime.
     li = t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
     )
@@ -288,10 +286,8 @@ def op_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed — each level feeds the next round AND the summary row).
     """
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # r13: edges via the collect_set-per-order explosion (grouped_pairs)
-    # instead of the within-order self-join — same distinct edge set, one
-    # join and two exchanges fewer (the op_triangle_count measurement);
-    # 4.39 s -> 3.57 s at sf0.1.
+    # grouped_pairs is the oracle's within-order self-join without the
+    # join; distinct() folds repeat co-orders into one edge.
     from qpmodel_spark.queries._util import grouped_pairs
 
     edges = (

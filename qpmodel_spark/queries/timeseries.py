@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from qpmodel_spark.catalog import fanout
-from qpmodel_spark.queries._util import grouped_pairs, t
+from qpmodel_spark.queries._util import both_directions, grouped_pairs, t
 from qpmodel_spark.registry import register
 
 # --------------------------------------------------------------------------
@@ -330,9 +330,8 @@ def op_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the distinct edge set once (eager localCheckpoint, the
     # dedup_components pattern): it feeds the degree aggregate, both wedge
     # sides, the closure probe and the edge count — five lineage uses.
-    # r13: pairs come from the collect_set-per-order explosion
-    # (grouped_pairs) instead of the DISTINCT + within-order self-join —
-    # same distinct edge set, one join and two exchanges fewer.
+    # grouped_pairs is the oracle's within-order self-join without the
+    # join; distinct() folds repeat co-orders into one edge.
     edges = (
         grouped_pairs(li, "l_orderkey", "l_partkey")
         .distinct()
@@ -473,12 +472,7 @@ def op_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE-skew-safe — and iterations are a constant factor.
     """
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # r13: grouped_pairs replaces the within-order self-join (same
-    # distinct pair set, fewer exchanges — see _support2_pairs)
-    pairs = grouped_pairs(li, "l_orderkey", "l_partkey").distinct()
-    edges = pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionAll(
-        pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
+    edges = both_directions(grouped_pairs(li, "l_orderkey", "l_partkey").distinct())
     # Materialize (edge + out-degree) once — every iteration joins against
     # it, and without the checkpoint each iteration's lineage recomputes
     # the pair generation (measured 15.4s → the checkpointed form at sf0.1;
@@ -549,11 +543,10 @@ SELECT CAST((SELECT count(*) FROM deg) AS BIGINT) AS n_nodes,
 
 
 def _support2_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r13 optimization: collect_set-per-order + map-side pair explosion
-    # (grouped_pairs) replaces the DISTINCT + within-order self-join —
-    # same (pa, pb) multiset (the join counted each co-order pair once per
-    # order too), 2 exchanges instead of 4 and no join.  Fan-out stays
-    # bounded by order size (<= 7 lineitems -> <= 21 pairs).
+    # grouped_pairs yields one (pa, pb) row per co-order, the multiset the
+    # oracle's DISTINCT + within-order self-join counts, in two exchanges
+    # (order key, then pair key) and no join.  Fan-out stays bounded by
+    # order size (<= 7 lineitems -> <= 21 pairs).
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     return (
         grouped_pairs(li, "l_orderkey", "l_partkey")
@@ -679,10 +672,7 @@ def op_pagerank_support2(spark: SparkSession, sf_dir: str) -> DataFrame:
     destination-keyed aggregate — |E| join rows per iteration, no pair
     blowup at any density.
     """
-    pairs = _support2_pairs(spark, sf_dir)
-    edges = pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionAll(
-        pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
+    edges = both_directions(_support2_pairs(spark, sf_dir))
     # degree via src-partitioned window count: one exchange, no join (r13)
     ewd = edges.withColumn(
         "d", F.count("*").over(Window.partitionBy("src"))
@@ -1774,10 +1764,7 @@ def op_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-round BFS distance labeling from the min-id node on the sparse
     witness graph (block comment): per round one frontier-keyed equi-join
     + one anti-join, never more than the frontier's adjacency in flight."""
-    pairs = _support2_pairs(spark, sf_dir)
-    edges = pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionAll(
-        pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    ).localCheckpoint(eager=True)
+    edges = both_directions(_support2_pairs(spark, sf_dir)).localCheckpoint(eager=True)
     # min(src) over the SYMMETRIC edge frame == the min node id, so the
     # source derives from the checkpointed edges, never re-running the
     # lineitem self-join behind _support2_pairs.
@@ -1867,9 +1854,7 @@ def op_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     pairs = _support2_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    edges = pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionAll(
-        pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
+    edges = both_directions(pairs)
     deg = edges.groupBy("src").agg(F.count("*").alias("d"))
     e1, e2 = edges.alias("e1"), edges.alias("e2")
     wedge = e1.join(
@@ -2986,12 +2971,7 @@ def op_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two synchronous min-tiebreak label-propagation rounds on the
     support>=2 witness graph; top-20 communities by size (block
     comment)."""
-    pairs = _support2_pairs(spark, sf_dir)
-    e = (
-        pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-        .unionAll(pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    e = both_directions(_support2_pairs(spark, sf_dir)).localCheckpoint(eager=True)
     lbl = e.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -3078,12 +3058,7 @@ def op_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity (Pearson r of endpoint degrees over the
     symmetric edge list) on the support>=2 witness graph (block
     comment)."""
-    pairs = _support2_pairs(spark, sf_dir)
-    e = (
-        pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-        .unionAll(pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    e = both_directions(_support2_pairs(spark, sf_dir)).localCheckpoint(eager=True)
     deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count("*").cast("bigint").alias("d")
     )

@@ -682,3 +682,78 @@ def test_fanout_bytes_parser():
     assert _parse_bytes("134217728b") == 134217728
     assert _parse_bytes("134217728") == 134217728
     assert _parse_bytes("64k") == 64 << 10
+    assert _parse_bytes("1.5g") == 3 << 29
+    assert _parse_bytes("0.5k") == 512
+
+
+def test_fanout_bytes_guard_fractional_size(spark, tmp_path, monkeypatch):
+    """A fractional maxPartitionBytes ('0.5k') parses, so the bytes guard
+    stays active instead of fanout's except dropping it.  Spark's own conf
+    setter rejects fractional byte strings, so the value is fed through
+    the session's conf getter."""
+    from qpmodel_spark.catalog import fanout
+
+    path = str(tmp_path / "fewfiles")
+    spark.range(0, 20_000).coalesce(2).write.parquet(path)
+    back = spark.read.parquet(path)
+    conf = back.sparkSession.conf
+    real_get = conf.get
+    monkeypatch.setattr(
+        conf,
+        "get",
+        lambda key, *default: "0.5k"
+        if key == "spark.sql.files.maxPartitionBytes"
+        else real_get(key, *default),
+    )
+    assert fanout(back) is back  # bytes / 512 >= target: no exchange added
+
+
+def test_is_empty_stops_at_first_nonempty_footer(spark, tmp_path, monkeypatch):
+    """Engine._is_empty reads footers only until one holds a row, and an
+    unreadable footer returns False (the caller takes the general MERGE
+    path)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    eng = Engine(spark, str(tmp_path))
+    os.makedirs(tmp_path / "t")
+    for i in range(3):
+        pq.write_table(pa.table({"id": [i]}), str(tmp_path / "t" / f"part-{i}.parquet"))
+    opened = []
+    real_file = pq.ParquetFile
+
+    def counting(path, *a, **kw):
+        opened.append(path)
+        return real_file(path, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    assert eng._is_empty("t") is False
+    assert len(opened) == 1
+
+    os.makedirs(tmp_path / "u")
+    (tmp_path / "u" / "part-0.parquet").write_bytes(b"not a parquet footer")
+    assert eng._is_empty("u") is False
+
+
+def test_asof_partitions_unknown_size_uses_shuffle_partitions(spark, monkeypatch):
+    """op_asof_join_pandas sizing: with no input files listed, or with
+    footers that cannot be read, the partition count falls back to the
+    session's shuffle partition count, never 1."""
+    import pyarrow.parquet as pq
+
+    from qpmodel_spark import catalog
+    from qpmodel_spark.queries.asof import _asof_partitions
+
+    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert default > 1
+    assert _asof_partitions(spark, spark.range(10)) == default
+
+    ev = catalog.load(spark, SF_DIR, "events")
+    # readable footers: size-derived, one task for the 1000-row fixture
+    assert _asof_partitions(spark, ev) == 1
+
+    def unreadable(*a, **kw):
+        raise OSError("footer unreadable")
+
+    monkeypatch.setattr(pq, "ParquetFile", unreadable)
+    assert _asof_partitions(spark, ev) == default

@@ -1084,6 +1084,25 @@ def test_pagerank_iteration_exchange_bound(spark):
     assert len(broadcasts) == _PR_ITERS, plan
 
 
+def test_pair_kernel_keyed_and_codegend(spark):
+    """The shared pair kernel under _support2_pairs: the group-key
+    exchange sits directly on the parquet scan (the collect_set runs after
+    it, not as a serial partial aggregate in the scan task), the pairs come
+    from generators rather than interpreted lambda functions, and the
+    subtree keeps its two exchanges (group key, then pair key)."""
+    import re
+
+    from qpmodel_spark.queries.timeseries import _support2_pairs
+
+    plan = explain_string(_support2_pairs(spark, SF_DIR), "formatted")
+    assert "lambdafunction" not in plan, plan
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 2, plan
+    tree = plan.split("\n\n")[0].splitlines()  # root first, scan last
+    first = max(i for i, line in enumerate(tree) if re.search(r"\bExchange \(", line))
+    assert "Scan parquet" in tree[first + 1], plan
+    assert not any("Aggregate" in line for line in tree[first:]), plan
+
+
 def test_graph_support2_witness_is_sparse(spark, duck):
     """The sparse-witness graph really is sparse (the bench row's
     interpretability contract): support>=2 thresholding caps max degree at
